@@ -339,11 +339,11 @@ def _run_child(cmd: list, env: dict, json_out: str, retries: int = 1):
     A transient child failure (JVM launch race, flap-window timeout) used
     to abort the whole interleaved protocol run and lose every prior
     measurement; now the child's stderr is kept in a log file, the child
-    is retried once, and a still-failing slot is skipped (the record then
-    simply carries one fewer disclosed run for that level)."""
+    is retried once, and a still-failing slot yields None (the caller keeps
+    it as a placeholder so later slots stay in their interleave round)."""
     for attempt in range(retries + 1):
-        err_path = tempfile.mktemp(prefix="bench_child_", suffix=".log")
-        with open(err_path, "wb") as err_f:
+        fd, err_path = tempfile.mkstemp(prefix="bench_child_", suffix=".log")
+        with os.fdopen(fd, "wb") as err_f:
             res = subprocess.run(cmd, env=env, stdout=subprocess.DEVNULL, stderr=err_f)
         if res.returncode == 0:
             try:
@@ -368,7 +368,8 @@ def _pair_analysis(all_runs: dict, n_lo: int, n_hi: int) -> tuple[list, dict | N
     interleaved (N, 4N) pair ran back-to-back; a pair whose four probes all
     sit in the same state (all healthy, or all degraded within 3x of each
     other) yields an efficiency where both sides paid the same tax. Returns
-    (pair_rows, best_same_state_pair).
+    (pair_rows, best_same_state_pair). ``all_runs[level][i]`` is round i's
+    run at that level, None when that slot failed.
     """
 
     def _probes(r):
@@ -383,8 +384,9 @@ def _pair_analysis(all_runs: dict, n_lo: int, n_hi: int) -> tuple[list, dict | N
         return all(p < 0.5 for p in ps) and max(ps) <= 3 * min(ps)
 
     pair_rows = []
-    for i in range(min(len(all_runs[n_lo]), len(all_runs[n_hi]))):
-        rl, rh = all_runs[n_lo][i], all_runs[n_hi][i]
+    for i, (rl, rh) in enumerate(zip(all_runs[n_lo], all_runs[n_hi])):
+        if rl is None or rh is None:
+            continue  # a failed slot (None placeholder): no back-to-back pair
         p_eff = (rh["events_per_sec"] / n_hi) / (rl["events_per_sec"] / n_lo)
         pair_rows.append(
             {
@@ -402,6 +404,27 @@ def _pair_analysis(all_runs: dict, n_lo: int, n_hi: int) -> tuple[list, dict | N
     return pair_rows, best_same
 
 
+def _tmp_json() -> str:
+    fd, path = tempfile.mkstemp(suffix=".json")
+    os.close(fd)
+    return path
+
+
+def _best_per_level(all_runs: dict) -> dict:
+    """Each level's fastest run, with every run's seconds disclosed; exits
+    with a clear message when every run of a level failed."""
+    results = {}
+    for level, runs in all_runs.items():
+        ok = [r for r in runs if r is not None]
+        if not ok:
+            print(json.dumps({"failed_level": level, "runs": all_runs}))
+            sys.exit(f"scaling protocol: every run at level {level} failed; no report written")
+        best = dict(min(ok, key=lambda r: r["sec"]))
+        best["all_secs"] = sorted(s for r in ok for s in r["all_secs"])
+        results[level] = best
+    return results
+
+
 def main_scaling(n_lo: int = 8, n_hi: int = 32, pairs: int = 2) -> None:
     """North-rule evidence: identical replay at N and 4N cores, fresh JVM each.
 
@@ -414,14 +437,14 @@ def main_scaling(n_lo: int = 8, n_hi: int = 32, pairs: int = 2) -> None:
     """
     _use_tmpfs_scratch()
     events_dir = os.path.join(tempfile.gettempdir(), f"bench_events_{CDC_EVENTS}_{CDC_FILLER}")
-    all_runs: dict[int, list[dict]] = {n_lo: [], n_hi: []}
+    all_runs: dict[int, list[dict | None]] = {n_lo: [], n_hi: []}
     for _p in range(pairs):
         for cores in (n_lo, n_hi):
             # don't start a timed child inside a degraded-paging window
             _wait_healthy_host(
                 timeout_s=float(os.environ.get("BENCH_SCALING_WAIT_SEC", "1800"))
             )
-            out = tempfile.mktemp(suffix=".json")
+            out = _tmp_json()
             env = dict(
                 os.environ,
                 SPARK_GRAFT_CPUS=str(cores),
@@ -437,14 +460,8 @@ def main_scaling(n_lo: int = 8, n_hi: int = 32, pairs: int = 2) -> None:
                 env,
                 out,
             )
-            if rec is not None:
-                all_runs[cores].append(rec)
-    results = {}
-    for cores, runs in all_runs.items():
-        best = min(runs, key=lambda r: r["sec"])
-        best = dict(best)
-        best["all_secs"] = sorted(s for r in runs for s in r["all_secs"])
-        results[cores] = best
+            all_runs[cores].append(rec)
+    results = _best_per_level(all_runs)
     lo, hi = results[n_lo], results[n_hi]
     per_core_lo = lo["events_per_sec"] / n_lo
     per_core_hi = hi["events_per_sec"] / n_hi
@@ -511,13 +528,13 @@ def main_scaling_executors(n_lo: int = 1, n_hi: int = 4, exec_cores: int = 4, pa
         )
     events_dir = os.path.join(tempfile.gettempdir(), f"bench_events_{CDC_EVENTS}_{CDC_FILLER}")
     spark_submit = shutil.which("spark-submit") or "spark-submit"
-    all_runs: dict[int, list[dict]] = {n_lo: [], n_hi: []}
+    all_runs: dict[int, list[dict | None]] = {n_lo: [], n_hi: []}
     for _p in range(pairs):
         for n_exec in (n_lo, n_hi):
             _wait_healthy_host(
                 timeout_s=float(os.environ.get("BENCH_SCALING_WAIT_SEC", "1800"))
             )
-            out = tempfile.mktemp(suffix=".json")
+            out = _tmp_json()
             total_cores = n_exec * exec_cores
             # per-executor memory is FIXED across levels (a real cluster's
             # aggregate memory scales with executor count — exactly the
@@ -552,13 +569,8 @@ def main_scaling_executors(n_lo: int = 1, n_hi: int = 4, exec_cores: int = 4, pa
                 env,
                 out,
             )
-            if rec is not None:
-                all_runs[n_exec].append(rec)
-    results = {}
-    for n_exec, runs in all_runs.items():
-        best = dict(min(runs, key=lambda r: r["sec"]))
-        best["all_secs"] = sorted(s for r in runs for s in r["all_secs"])
-        results[n_exec] = best
+            all_runs[n_exec].append(rec)
+    results = _best_per_level(all_runs)
     lo, hi = results[n_lo], results[n_hi]
     per_exec_lo = lo["events_per_sec"] / n_lo
     per_exec_hi = hi["events_per_sec"] / n_hi

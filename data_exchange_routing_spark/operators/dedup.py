@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 ORDER_COLS = ("warc_ts", "lsn")
 
@@ -67,6 +68,17 @@ def _dedup_window_salted(df: DataFrame, keys: list[str], n_salts: int) -> DataFr
     return final.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
 
 
+def with_text_field(schema: T.StructType) -> T.StructType:
+    """``schema`` with the extracted ``text`` column inserted after ``html``:
+    the row shape the fused dedup/extract pass produces."""
+    fields = []
+    for f in schema.fields:
+        fields.append(f)
+        if f.name == "html":
+            fields.append(T.StructField("text", T.StringType(), True))
+    return T.StructType(fields)
+
+
 def fused_local_dedup_extract(
     staged_input: DataFrame,
     n_buckets: int,
@@ -74,7 +86,8 @@ def fused_local_dedup_extract(
     bucket_col: str = "_b",
     no_dedup_dest: str = "dead_letter",
     engine: str = "arrow",
-):
+    staging_dir: str | None = None,
+) -> DataFrame:
     """Third physical strategy ("local"): ONE shuffle for the whole epoch.
 
     The agg strategy shuffles the full ~KB rows twice — once keyed (dest, url)
@@ -91,22 +104,28 @@ def fused_local_dedup_extract(
     map; delta rows get meta nulled (parity with the agg path, which drops
     meta before staging).
 
-    Returns a DataFrame shaped like ``staged_input`` + a ``text`` column
-    after ``html``, physically partitioned by (dest, bucket) and url-sorted —
-    ready for a direct partitionBy write (pass pre_partitioned=True to
-    stage_multicast_delta).
+    With ``staging_dir`` (the replay path) the pass also STAGES its
+    survivors: each url-sorted (dest, bucket) run streams into one parquet
+    file under ``<staging_dir>/<dest_col>=D/<bucket_col>=K/`` (every column
+    but those two, codec from ``spark.sql.parquet.compression.codec``), and
+    the returned DataFrame holds one ``lake.staging.STAGED_FILE_SCHEMA``
+    manifest row per file instead of the survivors — they never travel back
+    to the JVM. Collect it with ``lake.staging.staged_entries``; each
+    re-run writes a fresh set of files. Arrow engine only.
 
-    ``engine="arrow"`` (default, r05 bytes-per-event work) runs the pass via
-    ``mapInArrow``: adjacency keys compare as C-level Arrow kernels instead
-    of numpy str concatenation, non-survivors are dropped by an Arrow
-    ``filter`` WITHOUT ever becoming Python objects, and survivors' ``html``
-    buffers pass straight back to the JVM — only the survivor payloads cross
-    into Python (one ``as_py`` each, for extraction). The pandas engine is
-    kept verbatim for the byte-equivalence gate (tests/test_operators.py).
+    Without ``staging_dir`` it returns the survivors: ``staged_input`` + a
+    ``text`` column after ``html``, physically partitioned by (dest, bucket)
+    and url-sorted.
+
+    ``engine="arrow"`` (default) runs the pass via ``mapInArrow``: adjacency
+    keys compare as C-level Arrow kernels instead of numpy str
+    concatenation, non-survivors are dropped by an Arrow ``filter`` WITHOUT
+    ever becoming Python objects — only the survivor payloads cross into
+    Python (one ``as_py`` each, for extraction). The pandas engine is kept
+    verbatim for the byte-equivalence gate (tests/test_operators.py).
     """
     import numpy as np
     import pandas as pd  # noqa: F401
-    from pyspark.sql import types as T
 
     from data_exchange_routing_spark.functions.extract import extract_text_py
 
@@ -121,12 +140,7 @@ def fused_local_dedup_extract(
         F.desc("_lsn"),
     )
 
-    fields = []
-    for f in arranged.schema.fields:
-        fields.append(f)
-        if f.name == "html":
-            fields.append(T.StructField("text", T.StringType(), True))
-    out_schema = T.StructType(fields)
+    out_schema = with_text_field(arranged.schema)
     out_names = [f.name for f in out_schema.fields]
 
     def op(batches):
@@ -219,10 +233,29 @@ def fused_local_dedup_extract(
                 ),
             )
 
+    if staging_dir is not None:
+        if engine != "arrow":
+            raise ValueError(f"in-pass staging needs the arrow fused engine, got {engine!r}")
+        from data_exchange_routing_spark.lake.staging import (
+            STAGED_FILE_SCHEMA,
+            parquet_codec,
+            write_staged_runs,
+        )
+
+        codec = parquet_codec(
+            staged_input.sparkSession.conf.get("spark.sql.parquet.compression.codec")
+        )
+
+        def op_stage(batches):
+            return write_staged_runs(
+                op_arrow(batches), staging_dir, codec, dest_col=dest_col, bucket_col=bucket_col
+            )
+
+        return arranged.mapInArrow(op_stage, STAGED_FILE_SCHEMA)
     if engine == "arrow":
         return arranged.mapInArrow(op_arrow, out_schema)
     if engine == "pandas":
         return arranged.mapInPandas(op, out_schema)
-    # fail loudly: a typo'd engine knob silently measuring the wrong path
-    # would invalidate the very A/B the knob exists for
+    # fail loudly: a typo'd engine silently measuring the wrong path would
+    # invalidate the equivalence gate the pandas engine exists for
     raise ValueError(f"unknown fused engine {engine!r} (arrow|pandas)")

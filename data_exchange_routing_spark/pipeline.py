@@ -18,14 +18,17 @@ Error rows never abort the batch (F12, CHANGELOG 0.0.40) — they divert to the
 dead_letter table with exact error strings.
 
 Scale shape per epoch (default dedup_strategy="local"): one scan of the
-batch, one broadcast join (config ~5 rows), then ONE shuffle keyed
-(destination, bucket) whose partition-local sort makes last-writer-wins
-dedup an adjacency filter inside the same Arrow pass as text extraction,
-and O(batch)-sized delta file writes — per-epoch cost is O(batch),
-independent of table size (merge-on-read lake layer). The "agg" strategy
-(map-side-combined max_by, two shuffles) remains selectable for
-pathological duplicate rates; "window_salted" demonstrates explicit
-salting. All three are final-state-equivalence gated.
+batch, one broadcast join (config ~5 rows, a LocalRelation), then ONE
+shuffle keyed (destination, bucket) whose partition-local sort makes
+last-writer-wins dedup an adjacency filter inside the same Arrow pass as
+text extraction. That pass also writes the staged delta files (one pyarrow
+parquet file per (destination, bucket) run) and returns only one manifest
+row per file to the driver, which commits them — per-epoch cost is
+O(batch), independent of table size (merge-on-read lake layer). The "agg"
+strategy (map-side-combined max_by, two shuffles, Spark partitionBy staging
+write) remains selectable for pathological duplicate rates;
+"window_salted" demonstrates explicit salting. All three are
+final-state-equivalence gated.
 """
 
 from __future__ import annotations
@@ -42,7 +45,11 @@ from pyspark.sql import types as T
 
 from data_exchange_routing_spark import __version__
 from data_exchange_routing_spark.functions.extract import extract_text
-from data_exchange_routing_spark.lake.staging import DEST_COL, stage_multicast_delta
+from data_exchange_routing_spark.lake.staging import (
+    DEST_COL,
+    stage_multicast_delta,
+    staged_entries,
+)
 from data_exchange_routing_spark.lake.table import DELETED_COL, LSN_COL, LakeTable
 from data_exchange_routing_spark.operators.dedup import dedup_last_writer
 from data_exchange_routing_spark.operators.parse import (
@@ -560,19 +567,21 @@ class Warehouse:
     def _promote_registry_path(self) -> str:
         return os.path.join(self.root, "_checkpoints", "promoted_meta_keys.json")
 
-    def known_promote_keys(self) -> list[str]:
+    def known_promote_keys(self) -> list[str] | None:
+        """Registered promoted meta keys: None while the registry is absent
+        (no epoch has pre-scanned yet), [] once a pre-scan found none."""
         try:
             with open(self._promote_registry_path()) as f:
                 return sorted(json.load(f))
         except FileNotFoundError:
-            return []
+            return None
 
     def register_promote_keys(self, keys: list[str]) -> list[str]:
         """Union new keys into the registry (atomic replace; concurrent epochs
         serialize on the module lock — single-driver process, like the
         checkpoint log)."""
         with _PROMOTE_LOCK:
-            merged = sorted(set(self.known_promote_keys()) | set(keys))
+            merged = sorted(set(self.known_promote_keys() or []) | set(keys))
             tmp = self._promote_registry_path() + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(merged, f)
@@ -637,15 +646,20 @@ def apply_epoch(
     no-op thanks to per-table epoch guards.
 
     ONE full-batch Spark action per epoch in steady state:
-      1. the fused multicast write: dedup per (destination, url) -> ONE text
-         extraction pass -> ONE shuffle keyed (destination, bucket) -> staged
-         parquet, with dead-letter rows riding the same write. Promotable
-         meta keys come from the warehouse registry; an Observation on the
-         write verifies them for free, and only an epoch that introduces a
-         never-before-seen key pays a second staging pass (then the registry
-         absorbs it for all later epochs).
+      1. the fused staging pass (default "local" strategy): ONE shuffle keyed
+         (destination, bucket) -> ONE Arrow pass that dedups per
+         (destination, url), extracts text and writes each (destination,
+         bucket) run as a staged parquet file, with dead-letter rows riding
+         the same pass; the driver collects one manifest row per file
+         (lake/staging.py:staged_entries). Promotable meta keys come from
+         the warehouse registry; an Observation on the pass verifies them
+         for free, and only an epoch that introduces a never-before-seen
+         key pays a second staging pass (then the registry absorbs it for
+         all later epochs). The first epoch of a warehouse seeds the
+         registry with one cheap meta-key pre-scan, persisted even when
+         empty.
       2. per-table manifest commits run CONCURRENTLY, metadata-only (no
-         Spark job); lineage rows come from parquet footer stats gathered
+         Spark job); lineage rows come from the per-file stats gathered
          during staging (no extra scan).
     """
     import shutil
@@ -735,13 +749,13 @@ def apply_epoch(
         def build_and_stage_local(promote: list[str], attempt: int):
             """Fused one-shuffle variant (dedup_strategy="local"): ONE
             (dest, bucket) exchange + partition-local sort; last-writer-wins
-            dedup and text extraction happen together in a single Arrow pass
-            (operators/dedup.py:fused_local_dedup_extract); the write needs
-            no second repartition. Halves per-epoch shuffle bytes vs agg."""
+            dedup, text extraction AND the staged parquet write happen
+            together in a single Arrow pass
+            (operators/dedup.py:fused_local_dedup_extract), which returns
+            one manifest row per staged file. Halves per-epoch shuffle
+            bytes vs agg, and the survivors never travel back to the JVM."""
             from data_exchange_routing_spark.lake.table import BUCKET_COL
-            from data_exchange_routing_spark.operators.dedup import (
-                fused_local_dedup_extract,
-            )
+            from data_exchange_routing_spark.operators import dedup
 
             obs = Observation(f"meta-keys-{epoch_id}-{attempt}-{_uuid.uuid4().hex[:6]}")
             cols = [
@@ -779,23 +793,21 @@ def apply_epoch(
                     )
                 ).alias("keys"),
             )
-            fused = fused_local_dedup_extract(
-                staged_input, wh.n_buckets, dest_col=DEST_COL, bucket_col=BUCKET_COL,
-                # arrow engine is the default (equivalence-gated); the env
-                # knob exists for the bytes-per-event A/B protocol only
-                engine=os.environ.get("SPARK_GRAFT_FUSED_ENGINE", "arrow"),
-            )
             keep = {"url", "warc_ts", "html", "text", "lang", LSN_COL, DELETED_COL} | set(
                 promote
             )
-            delta_schema = T.StructType([f for f in fused.schema.fields if f.name in keep])
+            delta_schema = T.StructType(
+                [f for f in dedup.with_text_field(staged_input.schema).fields if f.name in keep]
+            )
             staging = os.path.join(
                 wh.root, "_staging", f"epoch-{epoch_id:08d}-{_uuid.uuid4().hex[:8]}"
             )
             _mark_staging_inflight(staging)
-            entries = stage_multicast_delta(
-                fused, staging, wh.n_buckets, pre_partitioned=True
+            staged = dedup.fused_local_dedup_extract(
+                staged_input, wh.n_buckets, dest_col=DEST_COL, bucket_col=BUCKET_COL,
+                staging_dir=staging,
             )
+            entries = staged_entries(staged)
             try:
                 raw = obs.get["keys"] or []
             except Exception:
@@ -807,7 +819,7 @@ def apply_epoch(
             build_and_stage = build_and_stage_local
 
         promote = wh.known_promote_keys()
-        if not promote:
+        if promote is None:
             # Cold registry (fresh warehouse): ONE cheap pre-scan of the
             # routed batch's meta keys (map_keys + distinct — html is pruned
             # from the scan, no payload shuffle) seeds the registry up
@@ -819,12 +831,10 @@ def apply_epoch(
             # local-path Observation measures; the pre- vs post-dedup
             # difference is the documented harmless superset (a key carried
             # only by dropped duplicates yields an extra nullable column).
-            # Steady state (non-empty registry) never runs this scan; a
-            # genuinely-new key arriving on a warm registry still takes the
-            # second-pass path below.
-            seed = detect_promotable_meta_keys(routed)
-            if seed:
-                promote = wh.register_promote_keys(seed)
+            # The registry is written even when the scan finds no key, so
+            # the scan runs once per warehouse; a genuinely-new key arriving
+            # later takes the second-pass path below.
+            promote = wh.register_promote_keys(detect_promotable_meta_keys(routed))
         delta_schema, entries_by_dest, observed, staging = build_and_stage(promote, 0)
         new_keys = [k for k in observed if k not in promote]
         if new_keys:

@@ -33,14 +33,11 @@ DESTINATION_TABLES = [r[1] for r in DEFAULT_ROUTES if r[4]]
 
 
 def default_route_config(spark: SparkSession) -> DataFrame:
-    rows = [
-        {
-            "route_key": k,
-            "destination_table": t,
-            "destination_partition": p,
-            "extra_meta": m,
-            "is_valid": v,
-        }
-        for (k, t, p, m, v) in DEFAULT_ROUTES
-    ]
-    return spark.createDataFrame(rows, ROUTE_CONFIG)
+    """The seeded routes as a ``LocalRelation``: built from pandas with
+    Arrow on, the 5 rows ride in the plan itself. A list of rows would make
+    a Python RDD instead, and every broadcast of it would run Python-worker
+    tasks."""
+    import pandas as pd
+
+    routes = pd.DataFrame(DEFAULT_ROUTES, columns=ROUTE_CONFIG.names)
+    return spark.createDataFrame(routes, ROUTE_CONFIG)

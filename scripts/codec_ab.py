@@ -146,24 +146,16 @@ def main() -> None:
     print("# input sizes:", sizes, flush=True)
 
     arms = {
-        "r04-baseline(pandas+snappy+lz4)": (
-            {"SPARK_GRAFT_PARQUET_CODEC": "snappy", "SPARK_GRAFT_IO_CODEC": "lz4",
-             "SPARK_GRAFT_FUSED_ENGINE": "pandas"},
+        "snappy+lz4": (
+            {"SPARK_GRAFT_PARQUET_CODEC": "snappy", "SPARK_GRAFT_IO_CODEC": "lz4"},
             ev_snappy,
         ),
-        "arrow-fused": (
-            {"SPARK_GRAFT_PARQUET_CODEC": "snappy", "SPARK_GRAFT_IO_CODEC": "lz4",
-             "SPARK_GRAFT_FUSED_ENGINE": "arrow"},
+        "snappy+io-zstd": (
+            {"SPARK_GRAFT_PARQUET_CODEC": "snappy", "SPARK_GRAFT_IO_CODEC": "zstd"},
             ev_snappy,
         ),
-        "arrow+io-zstd": (
-            {"SPARK_GRAFT_PARQUET_CODEC": "snappy", "SPARK_GRAFT_IO_CODEC": "zstd",
-             "SPARK_GRAFT_FUSED_ENGINE": "arrow"},
-            ev_snappy,
-        ),
-        "arrow+all-zstd+zstd-binlog": (
-            {"SPARK_GRAFT_PARQUET_CODEC": "zstd", "SPARK_GRAFT_IO_CODEC": "zstd",
-             "SPARK_GRAFT_FUSED_ENGINE": "arrow"},
+        "all-zstd+zstd-binlog": (
+            {"SPARK_GRAFT_PARQUET_CODEC": "zstd", "SPARK_GRAFT_IO_CODEC": "zstd"},
             ev_zstd,
         ),
     }

@@ -2,12 +2,12 @@
 
 Inside this host's degraded-paging windows, replay is bytes-touched-bound
 (the r04 cap analysis: ~0.2 GB/s shared memory-touch bandwidth across
-JVMs). This protocol runs the r04 bytes configuration (pandas fused engine,
-snappy parquet, snappy binlog, lz4 shuffle) against the r05 configuration
-(arrow fused engine, zstd parquet, zstd binlog) interleaved, and records
-the per-run host probes. Runs are only EVIDENCE when their probes show the
-degraded state (< 0.8 GB/s); the script labels each pair accordingly and
-keeps the first N degraded-state pairs.
+JVMs). This protocol runs the r04 bytes configuration (snappy parquet,
+snappy binlog, lz4 shuffle) against the r05 configuration (zstd parquet,
+zstd binlog) interleaved, and records the per-run host probes. Runs are
+only EVIDENCE when their probes show the degraded state (< 0.8 GB/s); the
+script labels each pair accordingly and keeps the first N degraded-state
+pairs.
 
 Usage: PYTHONPATH=/root/repo python scripts/degraded_ab.py [--events N] [--pairs K]
 Writes BENCH/degraded_ab.json.
@@ -39,14 +39,12 @@ def main() -> None:
     gen_events(ev_snappy, "snappy", args.events)
     gen_events(ev_zstd, "zstd", args.events)
     arms = {
-        "r04-bytes(pandas+snappy+snappy-binlog)": (
-            {"SPARK_GRAFT_PARQUET_CODEC": "snappy", "SPARK_GRAFT_IO_CODEC": "lz4",
-             "SPARK_GRAFT_FUSED_ENGINE": "pandas"},
+        "r04-bytes(snappy+snappy-binlog)": (
+            {"SPARK_GRAFT_PARQUET_CODEC": "snappy", "SPARK_GRAFT_IO_CODEC": "lz4"},
             ev_snappy,
         ),
-        "r05-bytes(arrow+zstd+zstd-binlog)": (
-            {"SPARK_GRAFT_PARQUET_CODEC": "zstd", "SPARK_GRAFT_IO_CODEC": "lz4",
-             "SPARK_GRAFT_FUSED_ENGINE": "arrow"},
+        "r05-bytes(zstd+zstd-binlog)": (
+            {"SPARK_GRAFT_PARQUET_CODEC": "zstd", "SPARK_GRAFT_IO_CODEC": "lz4"},
             ev_zstd,
         ),
     }
@@ -63,8 +61,8 @@ def main() -> None:
         ]
         rec["_degraded_pair"] = all(p < args.degraded_gbps for p in probes)
         rec["_gain"] = round(
-            rec["r05-bytes(arrow+zstd+zstd-binlog)"]["eps"]
-            / rec["r04-bytes(pandas+snappy+snappy-binlog)"]["eps"],
+            rec["r05-bytes(zstd+zstd-binlog)"]["eps"]
+            / rec["r04-bytes(snappy+snappy-binlog)"]["eps"],
             3,
         )
         pairs.append(rec)

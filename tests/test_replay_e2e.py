@@ -308,25 +308,59 @@ def test_staging_vacuum_reclaims_redelivery_leak(spark, events_dir, tmpdir_path)
 def test_cold_registry_single_staging_pass(spark, events_dir, tmpdir_path, monkeypatch):
     """A fresh warehouse must NOT pay the second staging pass: the cold
     promoted-key registry is seeded by the cheap pre-scan of the routed
-    batch, so pass 0 already carries the promoted columns (one
-    stage_multicast_delta call per epoch). A genuinely-new key arriving on
-    a WARM registry still re-stages (covered by the charset evolution
-    assertion in test_full_replay_matches_oracle: charset appears in a late
-    epoch and lands as a column)."""
+    batch, so pass 0 already carries the promoted columns (one staging
+    action — the staged_entries collect of the fused pass — per epoch). A
+    genuinely-new key arriving on a WARM registry still re-stages (covered
+    by the charset evolution assertion in test_full_replay_matches_oracle:
+    charset appears in a late epoch and lands as a column)."""
     import data_exchange_routing_spark.pipeline as P
 
     calls: list[int] = []
-    orig = P.stage_multicast_delta
+    orig = P.staged_entries
 
     def counting(*a, **k):
         calls.append(1)
         return orig(*a, **k)
 
-    monkeypatch.setattr(P, "stage_multicast_delta", counting)
+    monkeypatch.setattr(P, "staged_entries", counting)
     wh = Warehouse(spark, os.path.join(tmpdir_path, "wh_coldpass"), n_buckets=8)
     res = replay(wh, events_dir, stop_after_epoch=1, max_concurrent_epochs=2)
     assert res["applied_epochs"] == [0, 1]
     # epochs 0-1 of this generator introduce no post-registry keys beyond the
     # pre-scan seed: exactly one staged write per epoch
     assert len(calls) == 2, f"expected 2 staging passes (1/epoch), got {len(calls)}"
-    assert wh.known_promote_keys() != []
+    assert wh.known_promote_keys()
+
+
+def test_empty_registry_prescans_once(spark, events_dir, tmpdir_path, monkeypatch):
+    """Batches whose meta carries only standard keys (no route extra_meta,
+    epochs before the charset tranche) leave the promoted-key registry
+    EMPTY. It is persisted as such, so epoch 1 does not re-run the cold
+    pre-scan that epoch 0 paid."""
+    import data_exchange_routing_spark.pipeline as P
+    from data_exchange_routing_spark.schemas import ROUTE_CONFIG
+    from data_exchange_routing_spark.sources.configs import DEFAULT_ROUTES
+
+    routes = spark.createDataFrame(
+        [(k, t, p, None, v) for (k, t, p, _m, v) in DEFAULT_ROUTES], ROUTE_CONFIG
+    )
+    wh = Warehouse(spark, os.path.join(tmpdir_path, "wh_empty_registry"), n_buckets=8)
+    wh.init_tables()
+    assert wh.known_promote_keys() is None
+
+    def epoch(e: int):
+        batch = spark.read.parquet(os.path.join(events_dir, f"epoch_hint={e}"))
+        return P.apply_epoch(wh, batch, epoch_id=e, route_config=routes)
+
+    assert epoch(0)["promoted_columns"] == []
+    assert wh.known_promote_keys() == []
+    scans: list[int] = []
+    orig = P.detect_promotable_meta_keys
+
+    def counting(*a, **k):
+        scans.append(1)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(P, "detect_promotable_meta_keys", counting)
+    assert epoch(1)["promoted_columns"] == []
+    assert scans == [], "epoch 1 re-ran the cold-registry pre-scan"
